@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_parse_lineage_spark.session import configure, get_spark
+from hive_parse_lineage_spark.session import _py4j_nodelay, configure, get_spark
 from hive_parse_lineage_spark.sources.loader import DEFAULT_SF_DIR, load_tables
 
 
@@ -36,6 +36,7 @@ class Engine:
         diagnostic instead of a generic parse error."""
         from hive_parse_lineage_spark.plans.lineage import (
             check_supported_syntax)
+        _py4j_nodelay()
         check_supported_syntax(sql)
         return self.spark.sql(sql)
 
@@ -46,6 +47,7 @@ class Engine:
         statements execute eagerly; a trailing SELECT stays lazy."""
         from hive_parse_lineage_spark.plans.lineage import (
             check_supported_syntax, split_statements)
+        _py4j_nodelay()
         df = None
         stmts = split_statements(sql_text)
         for i, stmt in enumerate(stmts):

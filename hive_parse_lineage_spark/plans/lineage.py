@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from hive_parse_lineage_spark.session import _py4j_nodelay
+
 # ---------------------------------------------------------------------------
 # data model (ColLine: entity/ColLine.java:12-31)
 # ---------------------------------------------------------------------------
@@ -1023,7 +1025,11 @@ class _Walker:
 # — node classes, exprIds, expression trees, nested subquery plans — in
 # ONE round trip; these functions rebuild it and the _Walker walk_json
 # methods traverse it in pure Python. Per-statement JVM work drops to
-# parse + analyze + toJSON (+ catalog metadata for INSERTs). The py4j
+# parse + analyze + toJSON (+ catalog metadata for INSERTs). That one
+# reply is usually over 8 KB (median ~11 KB, largest ~36 KB on
+# perfbench's lineage mix), past which a py4j reply stalls ~44 ms on
+# Nagle unless session._py4j_nodelay has run on the thread's connection;
+# extract_lineage runs it first. The py4j
 # walk stays as the fallback for any shape the JSON path can't express
 # (HPL_JSON_WALK=0 forces it; =strict raises instead of falling back,
 # which the test suite uses so regressions can't hide in the fallback).
@@ -1675,10 +1681,10 @@ def _table_schema(spark: SparkSession, table: str) -> tuple[list[str], list[str]
     catalog order.
 
     Reads CatalogTable metadata straight from the session catalog —
-    one metadata fetch + a JSON schema decode (~13 ms) instead of
-    ``spark.catalog.listColumns``'s full Dataset construction (~370 ms
-    measured): this runs once per INSERT statement and dominated
-    lineage throughput.
+    one metadata fetch + a JSON schema decode (3-4 ms) instead of
+    ``spark.catalog.listColumns``'s full Dataset construction (66-104
+    ms; medians of 15 calls on four catalog tables, 4-core VM): this
+    runs once per INSERT statement.
     """
     jvm = spark.sparkContext._jvm
     name_parts = table.split(".")
@@ -1704,6 +1710,7 @@ def extract_lineage(spark: SparkSession, sql_text: str,
     ``traverse_views`` expands view bodies so columns trace through
     view chains to base tables (the reference stops at the view name).
     """
+    _py4j_nodelay()
     script = ScriptLineage()
     for stmt in split_statements(sql_text):
         check_supported_syntax(stmt)

@@ -35,8 +35,16 @@ SELECT o_orderkey, CASE WHEN o_orderstatus = 'O' THEN NULL ELSE o_orderstatus EN
 FROM orders WHERE NULLIF(o_orderstatus, 'P') IS NOT NULL ORDER BY o_orderkey
 """,
     # --- projection expressions ----------------------------------------
+    # Money arithmetic in DECIMAL, as in q17: ROUND(double, 2) of the
+    # double product lands on half-cent ties (74256.75 * 1.02 =
+    # 75741.885) that Spark and DuckDB round to opposite neighbours.
+    # The casts are exact (prices and rates are 2 dp), the decimal
+    # product is exact, and both engines round it half away from zero.
     "q04_arithmetic": """
-SELECT l_orderkey, l_linenumber, ROUND(l_extendedprice * (1 - l_discount) * (1 + l_tax), 2) AS charge,
+SELECT l_orderkey, l_linenumber,
+       CAST(ROUND(CAST(l_extendedprice AS DECIMAL(12,2))
+                  * (1.00 - CAST(l_discount AS DECIMAL(3,2)))
+                  * (1.00 + CAST(l_tax AS DECIMAL(3,2))), 2) AS DOUBLE) AS charge,
        l_orderkey % 5 AS m, ROUND(l_quantity / 2.0, 2) AS halfq,
        l_partkey + l_suppkey AS sm, l_partkey - l_suppkey AS df
 FROM lineitem WHERE l_orderkey < 100 ORDER BY l_orderkey, l_linenumber
@@ -95,8 +103,14 @@ SELECT r1.r_name AS a, r2.r_name AS b FROM region r1 CROSS JOIN region r2 ORDER 
 SELECT s.s_suppkey, n.n_nationkey FROM supplier s JOIN nation n
 ON s.s_nationkey < n.n_nationkey ORDER BY s.s_suppkey, n.n_nationkey
 """,
+    # DECIMAL, not ROUND(SUM(double), 2): the double sum's addition
+    # order differs between engines and can straddle a half-cent tie;
+    # the decimal sum is exact and order-free (see q04).
     "q17_join_multiway_agg": """
-SELECT l.l_orderkey, ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+SELECT l.l_orderkey,
+       CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))
+                      * (1.00 - CAST(l.l_discount AS DECIMAL(3,2)))), 2) AS DOUBLE)
+           AS revenue,
        CAST(o.o_orderdate AS DATE) AS odate
 FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
 JOIN lineitem l ON l.l_orderkey = o.o_orderkey

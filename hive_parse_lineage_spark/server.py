@@ -17,8 +17,11 @@ Unlike the reference (which hard-codes its datasource config at
 ParseController.java:20-24), the engine is injected. Lineage is
 plan-sized work on the driver — a single SparkSession serves all
 requests; requests are serialized around the shared session by the
-handler lock (Spark's analyzer is driver-side and cheap, SURVEY §6
-target ≥50 stmts/s).
+handler lock (Spark's analyzer is driver-side and cheap). Each request
+runs on a new thread and so on a new py4j connection; the engine sets
+TCP_NODELAY on it (``session._py4j_nodelay``) before any plan crosses
+py4j. ``perfbench/run.py --workload lineage_serve`` measures the
+service as its callers see it.
 """
 
 from __future__ import annotations

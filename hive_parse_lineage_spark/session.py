@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Runtime SQL confs the engine depends on. Applied both at build time and
@@ -67,6 +68,7 @@ def get_spark(app_name: str = "hive_parse_lineage_spark",
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _py4j_nodelay()
     return spark
 
 
@@ -82,4 +84,76 @@ def configure(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - non-settable conf on some build
             pass
+    _py4j_nodelay()
     return spark
+
+
+# py4j's private list of live JVM-side connections (py4j.GatewayServer).
+_PY4J_CONNECTIONS_FIELD = "connections"
+# Set on a py4j ClientServerConnection once _py4j_nodelay has run on it.
+_NODELAY_DONE = "_hpl_nodelay_done"
+# (gateway, its live GatewayServer.connections list or None if unreachable)
+_jvm_connections: tuple = (None, None)
+
+
+def _jvm_socket():
+    """The JVM end (a ``java.net.Socket``) of this thread's py4j
+    connection, or None. Opens the connection if the thread has none.
+
+    There is no public API for it: it is read from py4j's private
+    ``GatewayServer.connections`` by reflection, as the entry whose
+    remote port is this connection's local port. The list is read
+    without py4j's lock, so entries of other threads' closing
+    connections may be null; they are skipped and never touched.
+    """
+    global _jvm_connections
+    gateway = SparkContext._gateway
+    cached_gateway, conns = _jvm_connections
+    if cached_gateway is not gateway:
+        conns = None
+        try:
+            fld = (gateway.jvm.java.lang.Class.forName("py4j.GatewayServer")
+                   .getDeclaredField(_PY4J_CONNECTIONS_FIELD))
+            fld.setAccessible(True)
+            conns = fld.get(gateway.java_gateway_server)
+        finally:
+            # cached either way: a missing field is not looked up again
+            _jvm_connections = (gateway, conns)
+    if conns is None:
+        return None
+    snapshot = conns.toArray()  # opens this thread's connection if new
+    port = gateway._gateway_client.get_thread_connection().socket.getsockname()[1]
+    # newest connections are appended last
+    for i in range(len(snapshot) - 1, -1, -1):
+        entry = snapshot[i]
+        sock = entry.getSocket() if entry is not None else None
+        if sock is not None and sock.getPort() == port:
+            return sock
+    return None
+
+
+def _py4j_nodelay() -> None:
+    """Set TCP_NODELAY on the JVM end of this thread's py4j connection.
+
+    py4j's Java side writes each reply through an 8192-char
+    BufferedWriter on a socket without TCP_NODELAY. A longer reply goes
+    out in two writes, and Nagle holds the tail until Python's delayed
+    ACK fires: a flat ~44 ms on every reply over 8 KB (an analyzed
+    plan's ``toJSON()`` usually is). py4j opens one connection per
+    Python thread and closes it when the thread dies, so each new
+    thread needs this once; afterwards it costs one attribute check.
+    Any failure leaves the connection as it was; the caller proceeds.
+    """
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return
+    try:
+        client = gateway._gateway_client
+        if getattr(client.get_thread_connection(), _NODELAY_DONE, False):
+            return
+        sock = _jvm_socket()
+        setattr(client.get_thread_connection(), _NODELAY_DONE, True)
+        if sock is not None:
+            sock.setTcpNoDelay(True)
+    except Exception:
+        pass
